@@ -3,6 +3,7 @@ package graft.algos
 import graft.core.Algorithm
 import graft.fsops.FsOps
 import graft.io.{AtomicWriter, DataFormat, LoadMode}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -80,9 +81,20 @@ class AppendLoad(val spark: SparkSession, fsOps: FsOps, p: AppendLoadParams)
       p.format.read(spark, p.readerOptions, None, group: _*).schema
     else dataSchema
 
+  /** A path with a hidden (`.`-prefixed) name BELOW source_dir; a dot
+    * directory above source_dir (a `.stage/` landing area) hides nothing.
+    */
+  private def hiddenBelowSource(file: String): Boolean = {
+    val src = new Path(p.sourceDir)
+    val path = new Path(file)
+    val below = path.depth() - fsOps.fs(src).makeQualified(src).depth()
+    Iterator.iterate(path)(_.getParent).take(below)
+      .exists(_.getName.startsWith("."))
+  }
+
   override def read(): Vector[DataFrame] = {
     val files = fsOps.listFilesRecursive(p.sourceDir)
-      .filterNot(f => f.endsWith("_SUCCESS") || f.contains("/."))
+      .filterNot(f => f.endsWith("_SUCCESS") || hiddenBelowSource(f))
     val byHeader = files.groupBy(headerPathFor)
     val withSchemas = byHeader.toSeq.map { case (hp, group) =>
       (schemaForGroup(hp, group), group)

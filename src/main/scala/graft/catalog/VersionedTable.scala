@@ -134,7 +134,7 @@ object VersionedTable {
   def write(df: DataFrame, fsOps: FsOps, root: String, ts: Long,
       op: String = "write", maxAttempts: Int = 5): Long =
     writeLanded(df, fsOps, root, ts, op, maxAttempts, Seq.empty,
-      (d, dir) => d.write.parquet(dir))
+      observed((d, dir) => d.write.parquet(dir)))
 
   /** Optimistic-concurrency [[write]]: commit ONLY if the table is still
     * at `expectedVersion` (what the writer read before computing `df`).
@@ -158,7 +158,8 @@ object VersionedTable {
     // publish at a later number, which is exactly the lost-update OCC
     // exists to prevent). Losing the race for that number IS the conflict.
     try writeLanded(df, fsOps, root, ts, op, maxAttempts = 1, Seq.empty,
-      (d, dir) => d.write.parquet(dir), pin = Some(expectedVersion + 1))
+      observed((d, dir) => d.write.parquet(dir)),
+      pin = Some(expectedVersion + 1))
     catch {
       case _: VersionRaceExhausted =>
         throw new java.util.ConcurrentModificationException(
@@ -206,7 +207,7 @@ object VersionedTable {
         s"this snapshot needs exactly ${want.mkString(",")}")
     writeLanded(df, fsOps, root, ts, op, maxAttempts,
       Seq("cdc_keys" -> keys.sorted.mkString(",")),
-      (d, dir) => {
+      observed { (d, dir) =>
         d.write.parquet(dir)
         changes.write.parquet(s"$dir/$ChangesDir")
       }, pin)
@@ -351,35 +352,44 @@ object VersionedTable {
     }
   }
 
+  /** A single-pass landing whose row count rides on the write itself
+    * (`observe` = one map-side CollectMetrics in the write job) instead
+    * of re-reading the landed dir — the read-back was a whole extra
+    * schema-infer + scan + count job per commit, pure driver+scan
+    * overhead in every maintenance fold and pipeline stage. The metric
+    * equals the read-back count on any successful write (task retries
+    * could in principle overcount a metric, but a write's committed
+    * files come from exactly one successful attempt per task and the
+    * count is informational history metadata, not a correctness input).
+    * Only for plans that run the observed subtree ONCE: a range layout's
+    * `repartitionByRange` sampling job re-runs it and would double the
+    * count — those landings return their manifest's footer row count.
+    */
+  private def observed(write: (DataFrame, String) => Unit)
+      : (DataFrame, String) => Long = (df, dir) => {
+    val obs = new org.apache.spark.sql.Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")), dir)
+    obs.get.apply("rows") match {
+      case l: java.lang.Long => l.longValue()
+      case other => other.toString.toLong
+    }
+  }
+
   /** Shared commit protocol behind every write face: `land` materializes
-    * the snapshot into the writer-private dir; `extra` key/value pairs
-    * (index dimensions, partition-column types) are recorded in the
-    * commit so readers can discover the committed layout.
+    * the snapshot into the writer-private dir and returns its row count;
+    * `extra` key/value pairs (index dimensions, partition-column types)
+    * are recorded in the commit so readers can discover the committed
+    * layout.
     */
   private def writeLanded(df: DataFrame, fsOps: FsOps,
       root: String, ts: Long, op: String, maxAttempts: Int,
-      extra: Seq[(String, String)], land: (DataFrame, String) => Unit,
+      extra: Seq[(String, String)], land: (DataFrame, String) => Long,
       pin: Option[Long] = None): Long = {
     // writer-private landing dir: concurrent writers never touch each
     // other's files, and until a commit references it the dir is invisible
     val name = "d-" + java.util.UUID.randomUUID.toString.take(8)
     val dir = s"$root/$name"
-    // the commit's row count rides on the LANDING write itself
-    // (`observe` = one map-side CollectMetrics in the write job) instead
-    // of re-reading the landed dir — the read-back was a whole extra
-    // schema-infer + scan + count job per commit, pure driver+scan
-    // overhead in every maintenance fold and pipeline stage. The metric
-    // equals the read-back count on any successful write (task retries
-    // could in principle overcount a metric, but a write's committed
-    // files come from exactly one successful attempt per task and the
-    // count is informational history metadata, not a correctness input).
-    val obs = new org.apache.spark.sql.Observation()
-    land(df.observe(obs, org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("rows")), dir)
-    val rows = obs.get.apply("rows") match {
-      case l: java.lang.Long => l.longValue()
-      case other => other.toString.toLong
-    }
+    val rows = land(df, dir)
     val record = commitJson(ts, op, rows, name, extra)
     var attempt = 0
     var committed = -1L
@@ -787,7 +797,7 @@ object VersionedTable {
     writeLanded(df, fsOps, root, ts, op, maxAttempts,
       Seq("index_col" -> partitionCols.mkString(","),
         "index_kind" -> "hive", "part_types" -> partTypes),
-      (d, dir) => d.write.partitionBy(partitionCols: _*).parquet(dir))
+      observed((d, dir) => d.write.partitionBy(partitionCols: _*).parquet(dir)))
   }
 
   /** Internal partition column of bucketed snapshots — never part of
@@ -837,7 +847,7 @@ object VersionedTable {
       s"$BucketCol is reserved for the internal bucket layout")
     writeLanded(df, fsOps, root, ts, op, maxAttempts,
       Seq("bucket_col" -> bucketBy, "n_buckets" -> nBuckets.toString),
-      (d, dir) => {
+      observed { (d, dir) =>
         d.withColumn(BucketCol, bucketOf(col(bucketBy), nBuckets))
           // co-locate each bucket before the partitioned write: one file
           // per bucket instead of tasks × buckets fragments
@@ -939,7 +949,7 @@ object VersionedTable {
     try writeLanded(guarded, fsOps, root, ts, op, maxAttempts = 1,
       Seq("bucket_col" -> bucketBy, "n_buckets" -> n.toString,
         "bucket_map" -> mapStr) ++ changeExtra,
-      (d, dir) => {
+      observed { (d, dir) =>
         d.repartition(col(BucketCol))
           .write.partitionBy(BucketCol).parquet(dir)
         changes.foreach { case (feed, _) =>
@@ -1067,7 +1077,7 @@ object VersionedTable {
     val base = latestVersion(fsOps, root)
     val baseCommit = commitOf(fsOps, root, base)
     val df = readVersion(spark, fsOps, root, base)
-    val (extra, land): (Seq[(String, String)], (DataFrame, String) => Unit) =
+    val (extra, land): (Seq[(String, String)], (DataFrame, String) => Long) =
       (indexCol, baseCommit.bucketCol) match {
         case (Some(_), Some(bc)) =>
           // silently dropping the bucket metadata would kill the fold
@@ -1089,14 +1099,13 @@ object VersionedTable {
           // later delta commits keep working. Files = buckets here.
           val n = baseCommit.nBuckets.get
           (Seq("bucket_col" -> bc, "n_buckets" -> n.toString),
-            (d: DataFrame, dir: String) =>
+            observed((d, dir) =>
               d.withColumn(BucketCol, bucketOf(col(bc), n))
                 .repartition(col(BucketCol))
-                .write.partitionBy(BucketCol).parquet(dir))
+                .write.partitionBy(BucketCol).parquet(dir)))
         case (None, None) =>
           (Seq.empty,
-            (d: DataFrame, dir: String) =>
-              d.coalesce(numFiles).write.parquet(dir))
+            observed((d, dir) => d.coalesce(numFiles).write.parquet(dir)))
       }
     try writeLanded(df, fsOps, root, ts, "compact", maxAttempts = 1,
       extra, land, pin = Some(base + 1))

@@ -10,9 +10,9 @@ import graft.fsops.FsOps
   * `scala.util.parsing.json` (removed from the 2.13 stdlib); we use the
   * jackson-scala module that ships with Spark. Values are a plain
   * `Map[String, Any]` with typed accessors, same access pattern as the
-  * reference's ConfigReader.
+  * reference's ConfigReader. Every accessor reads through `values.get`.
   */
-final class JsonConfig(val values: Map[String, Any]) {
+class JsonConfig(val values: Map[String, Any]) {
 
   def get[T](key: String): T =
     values.getOrElse(key, throw new NoSuchElementException(
@@ -32,6 +32,7 @@ final class JsonConfig(val values: Map[String, Any]) {
   }
   def getIntOpt(key: String): Option[Int] =
     values.get(key).map { case n: Number => n.intValue(); case s => s.toString.toInt }
+  def getInt(key: String, default: Int): Int = getIntOpt(key).getOrElse(default)
 
   /** Required long (token budgets overflow Int at corpus scale). */
   def getLong(key: String): Long = get[Any](key) match {
@@ -68,6 +69,31 @@ final class JsonConfig(val values: Map[String, Any]) {
     case Some(other) => throw new IllegalArgumentException(
       s"$key is not a list: $other")
   }
+
+  /** Numeric list (`"ps": [0.5, 1]`): Jackson hands back Integer, Long or
+    * Double per element, so each converts through [[JsonConfig.number]]
+    * (a non-number fails naming `key[i]`); empty when absent, like
+    * [[getSeq]].
+    */
+  def getDoubles(key: String): Seq[Double] =
+    getSeq[Any](key).zipWithIndex.map { case (v, i) =>
+      JsonConfig.number(s"$key[$i]", v).doubleValue }
+  def getDoubles(key: String, default: Seq[Double]): Seq[Double] =
+    values.get(key).map(_ => getDoubles(key)).getOrElse(default)
+
+  /** Numeric map (`"fractions": {"a": 0.5, "b": 1}`); a non-number fails
+    * naming `key.sub`.
+    */
+  def getDoubleMap(key: String): Map[String, Double] =
+    get[Any](key) match {
+      case m: Map[_, _] => m.map { case (k, v) =>
+        k.toString -> JsonConfig.number(s"$key.$k", v).doubleValue }
+      case other => throw new IllegalArgumentException(
+        s"$key is not a map: $other")
+    }
+  def getDoubleMap(key: String,
+      default: Map[String, Double]): Map[String, Double] =
+    values.get(key).map(_ => getDoubleMap(key)).getOrElse(default)
 }
 
 object JsonConfig {
@@ -78,4 +104,18 @@ object JsonConfig {
 
   def fromFile(fsOps: FsOps, path: String): JsonConfig =
     parse(fsOps.readFile(path))
+
+  /** A params value that must be a number: any JSON number, or a string
+    * holding one; anything else fails naming `key`.
+    */
+  def number(key: String, v: Any): Number = {
+    def bad = new IllegalArgumentException(s"$key must be a number, got: $v")
+    v match {
+      case n: Number => n
+      case s: String =>
+        try new java.math.BigDecimal(s.trim)
+        catch { case _: NumberFormatException => throw bad }
+      case _ => throw bad
+    }
+  }
 }
