@@ -1,20 +1,32 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      graft.core.Session.cpus.toString)
-    val spark = graft.core.Session.builder("graft-bench")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+
+  /** The local session the driver mains (Bench, Verify, tools.Profile)
+    * run gates in: [[graft.core.Session.builder]]'s defaults on
+    * `Session.cpus` cores, with ANSI off — reference semantics are
+    * pre-ANSI (lenient casts, null on bad parse).
+    */
+  def session(appName: String): SparkSession = {
+    val spark = graft.core.Session.builder(appName)
+      .master(s"local[${graft.core.Session.cpus}]")
       .config("spark.sql.ansi.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // warmup: absorb JVM/codegen/scan-index startup outside the timings
+    spark
+  }
+
+  /** Absorbs JVM, codegen and scan-index start-up outside the timings. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
     graft.core.Tables(spark, sfDir, "lineitem").count()
     graft.core.Tables(spark, sfDir, "events").groupBy("event_type").count()
       .collect()
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session("graft-bench")
+    warmUp(spark, sfDir)
     val named = SparkEntry.queries.toSeq.sortBy(_._1)
     def once(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {

@@ -458,54 +458,43 @@ object VersionedTable {
     val tmp = new Path(pp.getParent,
       "." + pp.getName + "." + java.util.UUID.randomUUID.toString.take(8)
         + ".tmp")
+    // exists-check + rename: atomic fail-if-exists on HDFS; the loser
+    // (destination already there, or rename refused) drops its staging file
+    def renameIfAbsent(): Boolean = {
+      val renamed = !f.exists(pp) && {
+        try f.rename(tmp, pp)
+        catch {
+          case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+          case _: java.nio.file.FileAlreadyExistsException => false
+        }
+      }
+      if (!renamed) f.delete(tmp, false)
+      renamed
+    }
     try {
       val out = f.create(tmp, false) // private name: never contended
       try out.write(content.getBytes("UTF-8")) finally out.close()
-      val won =
-        if (f.getScheme == "file") {
-          // atomic fail-if-exists publication on POSIX: link, then drop
-          // the staging name (the link target IS the published commit)
-          try {
-            java.nio.file.Files.createLink(
-              java.nio.file.Paths.get(pp.toUri.getPath),
-              java.nio.file.Paths.get(tmp.toUri.getPath))
-            f.delete(tmp, false)
-            true
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException =>
-              f.delete(tmp, false); false
-            // local mounts exposed under file: that don't support hard
-            // links (some NFS/SMB/FAT/overlay configs): fall back to the
-            // exists-check + rename publication — racy on raw POSIX but
-            // functional, and strictly no worse than the pre-link code
-            case _: UnsupportedOperationException |
-                _: java.nio.file.FileSystemException =>
-              if (f.exists(pp)) { f.delete(tmp, false); false }
-              else {
-                val renamed =
-                  try f.rename(tmp, pp)
-                  catch {
-                    case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-                      false
-                    case _: java.nio.file.FileAlreadyExistsException => false
-                  }
-                if (!renamed) f.delete(tmp, false)
-                renamed
-              }
-          }
-        } else {
-          if (f.exists(pp)) { f.delete(tmp, false); return false } // lost
-          val renamed =
-            try f.rename(tmp, pp)
-            catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-                false
-              case _: java.nio.file.FileAlreadyExistsException => false
-            }
-          if (!renamed) f.delete(tmp, false)
-          renamed
+      if (f.getScheme == "file") {
+        // atomic fail-if-exists publication on POSIX: link, then drop
+        // the staging name (the link target IS the published commit)
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(pp.toUri.getPath),
+            java.nio.file.Paths.get(tmp.toUri.getPath))
+          f.delete(tmp, false)
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            f.delete(tmp, false); false
+          // local mounts exposed under file: that don't support hard
+          // links (some NFS/SMB/FAT/overlay configs): fall back to the
+          // exists-check + rename publication — racy on raw POSIX but
+          // functional, and strictly no worse than the pre-link code
+          case _: UnsupportedOperationException |
+              _: java.nio.file.FileSystemException =>
+            renameIfAbsent()
         }
-      won
+      } else renameIfAbsent()
     } catch {
       case e: Throwable =>
         if (f.exists(tmp)) f.delete(tmp, false)

@@ -810,4 +810,29 @@ class VersionedTableSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("vacuumed"))
   }
+
+  test("publishExclusive through a non-file scheme takes the rename " +
+      "path: the first publish wins, a second of the same version loses " +
+      "and leaves the winner intact, no staging file remains") {
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.renamefs.impl", classOf[RenameOnlyFileSystem].getName)
+    val rfs = new FsOps(conf)
+    val dir = "renamefs://" + tmp("vt_pub") + "/_commits"
+    val p = s"$dir/00000000000000000001.json"
+    assert(rfs.fs(new org.apache.hadoop.fs.Path(p)).getScheme === "renamefs")
+    assert(VersionedTable.publishExclusive(rfs, p, "winner"))
+    assert(!VersionedTable.publishExclusive(rfs, p, "loser"))
+    assert(rfs.readFile(p) === "winner")
+    assert(rfs.ls(dir).toSeq === Seq("00000000000000000001.json"))
+  }
+}
+
+/** The local file system under its own scheme, so commit publication
+  * takes the exists-check + rename path HDFS and object stores take
+  * instead of the `file:` hard link.
+  */
+class RenameOnlyFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "renamefs"
+  override def getUri: java.net.URI = java.net.URI.create("renamefs:///")
 }

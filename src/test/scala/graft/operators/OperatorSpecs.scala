@@ -467,6 +467,37 @@ class SimilaritySpec extends SparkSpec {
     plan should not include "Join"
   }
 
+  test("embeddingCovariance equals the per-row pair-explode formulation " +
+      "cell for cell on quantized random vectors") {
+    val emb = spark.range(300).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(7)), d =>
+        ((pmod(xxhash64($"id", d), lit(1000000L)).cast("double")
+          / 1000000.0) - 0.5).cast("float")).as("embedding"))
+    val scale = 1024
+    // the explode form: every row emits its dims²/2 products, summed per
+    // cell, then the same integer moments → population covariance
+    val q = emb.select(transform($"embedding",
+      x => floor(x.cast("double") * scale).cast("long")).as("q"))
+    val lin = q.select(posexplode($"q").as(Seq("i", "x")))
+      .groupBy($"i").agg(count(lit(1)).as("n"), sum($"x").as("s"))
+    val dims = org.apache.spark.sql.functions.size($"q") // Matchers.size
+    val cells = q.select(explode(flatten(transform($"q", (x, i) =>
+        transform(slice($"q", i + 1, dims - i),
+          (y, j0) => struct(i.as("i"), (i + j0).as("j"), (x * y).as("p"))))))
+        .as("c"))
+      .groupBy($"c.i".as("i"), $"c.j".as("j")).agg(sum($"c.p").as("sp"))
+    val explodeForm = cells
+      .join(lin.select($"i", $"s".as("si"), $"n"), Seq("i"))
+      .join(lin.select($"i".as("j"), $"s".as("sj")), Seq("j"))
+      .select($"i", $"j", $"n", (round(($"n".cast("double")
+          * $"sp".cast("double") - $"si".cast("double") * $"sj".cast("double"))
+        / ($"n".cast("double") * $"n".cast("double")
+          * lit(scale.toDouble * scale)), 6) + lit(0.0)).as("cov"))
+    val got = Similarity.embeddingCovariance(emb, "embedding", scale)
+    got.count() shouldBe 36L // 8 dims: upper triangle incl. diagonal
+    assertSameRows(got, explodeForm)
+  }
+
   test("CovarianceMomentsAgg buffer: n, linear sums, upper triangle — " +
       "and merge across partitions is exact") {
     val emb = Seq(

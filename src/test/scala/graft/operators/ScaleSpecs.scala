@@ -196,3 +196,80 @@ class MultimodalPartitionSpec extends SparkSpec {
     decodePartitions(media).count() shouldBe 2
   }
 }
+
+/** What must not change when the corpus grows: each operator's output is
+  * either fixed-size or exactly proportional to the input. The corpus is
+  * the sf0.001 tables replicated 3x with disjoint ids and a per-replica
+  * text prefix, so replicas are near- but not exact duplicates.
+  */
+class ReplicationInvariantSpec extends SparkSpec {
+  import graft.core.Tables
+  import org.apache.spark.sql.DataFrame
+
+  private val sf = "/root/testdata/sf0.001"
+  private val factor = 3
+
+  /** `factor` copies of `df`: copy r shifts each id column past the
+    * earlier copies and prefixes the `text` column with a replica marker.
+    */
+  private def replicate(df: DataFrame, ids: Seq[String],
+      text: String = ""): DataFrame = {
+    val stride = ids.map(c => c -> (df.agg(max(col(c))).head.getLong(0) + 1))
+      .toMap
+    (0 until factor).map { r =>
+      df.select(df.columns.toSeq.map {
+        case c if stride.contains(c) => (col(c) + lit(r * stride(c))).as(c)
+        case c if c == text => concat(lit(s"replica$r marker "), col(c)).as(c)
+        case c => col(c)
+      }: _*)
+    }.reduce(_ unionByName _)
+  }
+
+  test("replicated 3x: fixed-size reports keep their size, per-row " +
+      "outputs scale exactly, chunks scale within one per doc") {
+    val docs1 = Tables(spark, sf, "documents")
+      .select(col("doc_id"), col("text"), col("lang"), col("source"))
+    val docsN = replicate(docs1, Seq("doc_id"), "text").cache()
+    val emb1 = Tables(spark, sf, "embeddings")
+    val embN = replicate(emb1, Seq("vec_id"))
+    val ev1 = Tables(spark, sf, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
+    val evN = replicate(ev1, Seq("event_id", "user_id"))
+    try {
+      def both(f: DataFrame => Long, one: DataFrame, many: DataFrame) =
+        (f(one), f(many))
+
+      val (o1, oN) = both(Similarity.embeddingOutliers(_, "vec_id",
+        "embedding", "label", k = 5).count(), emb1, embN)
+      oN shouldBe o1
+      val model = Classify.prepareModel(Classify.naiveBayesModel(
+        docs1.filter(col("doc_id") % 5 === 0), "text", "lang", 30))
+      val target = docs1.filter(col("doc_id") % 25 === 0)
+      Seq[DataFrame => Long](
+        Classify.scoreWithModel(_, model, "doc_id", "text").count(),
+        Dedup.repeatedSpans(_, "doc_id", "text", 4).count(),
+        Dsir.importanceWeights(_, target, "doc_id", "text", 512).count()
+      ).foreach { f =>
+        val (n1, nN) = both(f, docs1, docsN)
+        n1 should be > 0L
+        nN shouldBe factor * n1
+      }
+      // the 2-token prefix can push a doc across one stride boundary
+      val (c1, cN) = both(Packing.chunkText(_, "doc_id", "text", 32, 24)
+        .count(), docs1, docsN)
+      val nDocs = docs1.count()
+      cN should (be >= factor * c1 and be <= factor * (c1 + nDocs))
+      both(Stats.mutualInformation(_, "lang", "source").count(),
+        docs1, docsN) shouldBe ((1L, 1L))
+      val (t1, tN) = both(Funnel.transitionMatrix(_, "user_id",
+        "event_type", "ts", "event_id").count(), ev1, evN)
+      tN should be <= t1 // bounded by the event-type domain squared
+      both(TextAnalysis.blocklistReport(_, "doc_id", "text",
+        Seq("slow", "big", "vector", "zzz_unused")).count(),
+        docs1, docsN) shouldBe ((4L, 4L))
+      val (b1, bN) = both(TextAnalysis.bigramLogProbScore(_, "doc_id",
+        "text", modelSize = 500, historySize = 64).count(), docs1, docsN)
+      bN should be <= factor * b1
+    } finally docsN.unpersist()
+  }
+}

@@ -568,6 +568,9 @@ class SamplingSpec extends SparkSpec {
           .orderBy(Sampling.hashBucket($"id"), $"id")))
       .filter($"__r" <= 50).drop("__r")
     assertSameRows(capped, naive)
+    // the million-group opt-out (no broadcast hint) keeps the same rows
+    assertSameRows(Sampling.capPerGroup(df, "id", "grp", 50,
+      broadcastThresholds = false), naive)
     // plan asserted AFTER execution: the threshold join DOES carry a
     // forced broadcast hint by default — CapProbe measured it load-bearing
     // under skew (without it, the rank window pins a skewed SMJ that AQE
